@@ -6,11 +6,13 @@ no-crawl mode (lib/job_test.go:55-88), redirect chains + cap
 (lib/worker_test.go:3-79).
 """
 
+import tempfile
+
 import pytest
 from pyspark.sql import functions as F
 
 from walk_spark.config import CrawlConfig
-from walk_spark.plans.crawl import crawl
+from walk_spark.plans.crawl import Crawler, crawl
 from walk_spark.sources.pages import (
     redirect_chain_pages, self_linking_pages, tree_site_pages, two_page_pages,
 )
@@ -96,13 +98,16 @@ def test_two_page_retry_and_dedup(spark):
     assert errs.count() == 4
 
 
-def test_requeued_raw_seed_still_normalized(spark):
+@pytest.mark.parametrize(
+    "route", ["seeds", "add_seeds", "add_seeds_df", "resume"]
+)
+def test_requeued_raw_seed_still_normalized(spark, route):
     """A seed that needs normalization AND fails (500 -> requeue) must be
-    normalized on EVERY attempt, not just the first: the fetch path's
-    depth-0 tracking may skip the normalize UDF only for supersteps whose
-    batch provably contains no depth-0 row — a requeued seed keeps the
-    queue's depth-0 count nonzero, so each retry must still hit the corpus
-    row (status 500), never degrade to a 'not found' miss."""
+    normalized on EVERY attempt, not just the first, whichever route
+    enqueued it — the config's seed list, add_seeds, add_seeds_df, or a
+    resumed snapshot (which must normalize the queued seeds it restores):
+    each retry must still hit the corpus row (status 500), never degrade
+    to a 'not found' miss."""
     pages = spark.createDataFrame(
         [
             ("http://mixed.test", b"<html><body>boom</body></html>", 500),
@@ -110,24 +115,34 @@ def test_requeued_raw_seed_still_normalized(spark):
         ],
         "url string, html binary, status int",
     ).withColumn("warc_ts", F.to_timestamp(F.lit("2000-01-01 00:00:00")))
-    cfg = CrawlConfig(
-        # raw seed spelling normalizes to http://mixed.test
-        seeds=["HTTPS://WWW.MiXed.test/", "http://mixed.test/ok"],
-        domains=["http://mixed.test"],
-        max_attempts=2,
-    )
-    r = crawl(spark, pages, cfg)
-    seed_rows = r.resources.filter(
-        F.col("url") == "HTTPS://WWW.MiXed.test/"
-    ).collect()
+    raw = "HTTPS://WWW.MiXed.test/"  # normalizes to http://mixed.test
+    ok = "http://mixed.test/ok"
+
+    def cfg(seeds, **kw):
+        return CrawlConfig(seeds=seeds, domains=["http://mixed.test"],
+                           max_attempts=2, **kw)
+
+    if route == "resume":
+        wd = tempfile.mkdtemp()
+        Crawler(spark, pages, cfg([raw, ok], max_supersteps=1),
+                workdir=wd).run()
+        r = Crawler.resume(spark, pages, cfg([raw, ok]), wd).run()
+    else:
+        c = Crawler(spark, pages, cfg([raw, ok] if route == "seeds" else [ok]))
+        if route == "add_seeds":
+            c.add_seeds([raw])
+        elif route == "add_seeds_df":
+            c.add_seeds_df(spark.createDataFrame([(raw,)], "url string"))
+        r = c.run()
+    seed_rows = r.resources.filter(F.col("url") == raw).collect()
     # 1 + max_attempts fetches, every one matched the corpus row (500),
     # none fell through to the miss branch
     assert len(seed_rows) == 3
     assert all(x["status"] == 500 for x in seed_rows)
     assert all(x["error"] is None for x in seed_rows)
     by_url = {x["url"]: x for x in r.frontier.collect()}
-    assert by_url["HTTPS://WWW.MiXed.test/"]["status"] == "failed"
-    assert by_url["http://mixed.test/ok"]["status"] == "done"
+    assert by_url[raw]["status"] == "failed"
+    assert by_url[ok]["status"] == "done"
 
 
 def test_ignore_patterns(spark):

@@ -143,8 +143,10 @@ def test_simhash_block_keys_complete(spark):
         assert all(r["s"] >= 1 for r in shared), d
 
 
-def test_minhash_dropped_bucket_report(spark):
-    """No silent caps: oversized buckets are counted in the report."""
+@pytest.mark.parametrize("k, bands", [(128, 32), (10, 3)])
+def test_minhash_dropped_bucket_report(spark, k, bands):
+    """No silent caps: oversized buckets are counted in the report. k need
+    not be a multiple of bands (trailing signature rows are unused)."""
     from walk_spark.operators.dedup_text import minhash_lsh_pairs
     # 40 identical docs -> every band bucket holds all 40 rows
     docs = spark.range(0, 40).select(
@@ -152,11 +154,16 @@ def test_minhash_dropped_bucket_report(spark):
         F.lit("the same boilerplate text repeated everywhere").alias("text"),
     )
     report: dict = {}
-    pairs = minhash_lsh_pairs(docs, threshold=0.5, max_bucket_size=10,
-                              report=report)
+    pairs = minhash_lsh_pairs(docs, threshold=0.5, k=k, bands=bands,
+                              max_bucket_size=10, report=report)
     assert pairs.count() == 0            # every bucket was over the cap
     assert report["dropped_buckets"] > 0
     assert report["dropped_rows"] >= 40
+
+
+def test_minhash_more_bands_than_rows_rejected(docs):
+    with pytest.raises(ValueError, match="exceeds k"):
+        DT.minhash_lsh_pairs(docs, k=8, bands=16)
 
 
 def test_simhash_dropped_bucket_report(spark):

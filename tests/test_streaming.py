@@ -133,3 +133,33 @@ def test_add_seeds_df_large_batch_no_driver_collect(spark):
                           q.orderBy("url").limit(3).collect())
     assert c.add_seeds_df(seeds) == 0  # full redelivery: all dedup away
     c.close()
+
+
+@pytest.mark.parametrize("broadcast_rows", [100_000, 10])
+def test_add_seeds_df_seed_norms_drain(spark, monkeypatch, broadcast_rows):
+    """Streamed seeds that are not their own normal form (https, www.,
+    trailing slash) are fetched under their normal form, and the
+    (url, url_norm) side table holds only seeds still queued: it never
+    grows across micro-batches and is empty once each batch drains —
+    with the broadcast join and, above the row bound, without it."""
+    monkeypatch.setattr(Crawler, "_SEED_NORM_BROADCAST_ROWS", broadcast_rows)
+    n = 30
+    pages = spark.range(3 * n).select(
+        F.concat(F.lit("http://s.test/p"), F.col("id")).alias("url"),
+        F.lit(b"<html><body>ok</body></html>").alias("html"),
+        F.lit(200).alias("status"),
+        F.to_timestamp(F.lit("2000-01-01 00:00:00")).alias("warc_ts"),
+    )
+    c = Crawler(spark, pages, CrawlConfig(seeds=[], domains=["http://s.test"]))
+    for b in range(3):
+        batch = spark.range(b * n, (b + 1) * n).select(
+            F.concat(F.lit("HTTPS://WWW.s.test/p"), F.col("id"), F.lit("/"))
+            .alias("url")
+        )
+        assert c.add_seeds_df(batch) == n
+        assert c._seed_norm_rows == n  # earlier batches' seeds are gone
+        c.run()
+        assert c._seed_norm_df is None
+    rows = c.resources.filter(F.col("url").startswith("HTTPS://")).collect()
+    assert len(rows) == 3 * n
+    assert all(r["status"] == 200 and r["error"] is None for r in rows)

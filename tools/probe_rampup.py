@@ -58,7 +58,7 @@ def main() -> None:
     c = Crawler(spark, pages, cfg)
     c.warm()
     corpus = c.pages  # prepped, hash-partitioned on p_url_norm, persisted
-    P = c._corpus_parts()
+    P = c._pin_parts
 
     # the ss1 batch: seed urls, normalized (no redirect chains in this corpus)
     from walk_spark.functions.urlnorm import normalize_url

@@ -207,7 +207,8 @@ def _band_hash_u64(sigs: "np.ndarray", bands: int) -> "np.ndarray":
     measurable per-query codegen cost."""
     docs, k = sigs.shape
     rows = k // bands
-    m = sigs.reshape(docs, bands, rows).astype(np.uint64)
+    # trailing k % bands signature rows belong to no band
+    m = sigs[:, :bands * rows].reshape(docs, bands, rows).astype(np.uint64)
     h = np.full((docs, bands), np.uint64(0x9E3779B97F4A7C15))
     mul = np.uint64(0xC2B2AE3D27D4EB4F)
     for j in range(rows):
@@ -231,8 +232,12 @@ def minhash_signatures(docs: DataFrame, k: int = 128, shingle_n: int = 3,
 
     ``emit_bands`` > 0 additionally returns a ``bands`` array<long> column
     of that many per-band keys (``_band_hash_u64``), so the LSH banding
-    needs no JVM-side hash expression over the signature array.
+    needs no JVM-side hash expression over the signature array; it may
+    not exceed ``k`` (an empty band would put every document in one
+    bucket).
     """
+    if emit_bands > k:
+        raise ValueError(f"bands={emit_bands} exceeds k={k} signature rows")
     a, b = _minhash_params(k, seed)
 
     def _sig_arrays(texts: pd.Series) -> list:
@@ -343,7 +348,8 @@ def minhash_lsh_pairs(docs: DataFrame, threshold: float = 0.5, k: int = 128,
                       report: dict | None = None) -> DataFrame:
     """Near-duplicate candidate pairs with estimated jaccard ≥ threshold.
 
-    sig -> split into ``bands`` bands of k/bands rows -> hash each band ->
+    sig -> split into ``bands`` bands of k//bands rows (trailing rows
+    unused; ``bands > k`` raises ValueError) -> hash each band ->
     explode to (band, bucket) keys -> self-join within buckets -> estimate
     jaccard as matching-minhash fraction -> threshold.
 

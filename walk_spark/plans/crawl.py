@@ -100,10 +100,6 @@ ORDER_SCHEMA = StructType(
 _norm_udf = F.pandas_udf(normalize_url_series, returnType=StringType())
 
 
-def _canonical_host_py(url: str) -> str:
-    return canonical_host(url)
-
-
 @dataclass
 class CrawlResult:
     frontier: DataFrame
@@ -214,7 +210,7 @@ class Crawler:
         from pyspark import StorageLevel
         if self.pages is not None:
             self.pages = self.pages.repartition(
-                self._corpus_parts(), "p_url_norm"
+                self._pin_parts, "p_url_norm"
             ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
         self._has_redirects: bool | None = None
         self._chains: DataFrame | None = None
@@ -253,31 +249,22 @@ class Crawler:
         self._res_parts: list[DataFrame] = []
         self._order_parts: list[DataFrame] = []
         self._queued_count: int | None = None
-        #: exact count of QUEUED depth-0 rows (seeds are the only urls the
-        #: fetch path must still normalize — see _fetch). Maintained with
-        #: ZERO extra jobs: seeded from the driver-side seed list, updated
-        #: from the per-superstep metrics aggregate (picked vs requeued
-        #: depth-0), adjusted by add_seeds*/forget_urls, re-derived in the
-        #: same one-time aggregate run() pays on resume. None = unknown →
-        #: _fetch keeps the safe normalize branch.
-        self._d0_queued: int | None = None
-        #: raw seed -> normal form, for driver-known seeds whose normal
-        #: form DIFFERS from the raw string (well-formed seeds are fixed
-        #: points and are omitted). Lets _fetch attach url_norm with a
-        #: tiny broadcast map instead of a Python UDF pass: a non-fixed-
-        #: point key can never collide with a depth>0 url (those are
-        #: normalizer outputs, i.e. fixed points), so coalesce(map[url],
-        #: url) ≡ normalize(url) for every batch row — as long as every
-        #: queued depth-0 row came from a driver-side list
-        #: (``_streamed_d0`` guards the add_seeds_df / resumed-state
-        #: cases, which fall back to the UDF branch).
-        self._seed_norms: dict[str, str] = {}
+        #: (url, url_norm) side table of depth-0 urls whose normal form
+        #: DIFFERS from the raw string — seeds are enqueued verbatim
+        #: (lib/coordinator.go:174-178), every other url is a normalizer
+        #: output and thus a fixed point. Filled once per url at enqueue:
+        #: on the driver for seed lists, by one normalize pass for
+        #: add_seeds_df and resume. Pruned after every superstep to the
+        #: seeds still queued, so it is bounded by the queue and empty once
+        #: they are fetched. None = every queued url is its own normal form
+        #: (the usual case: well-formed seeds).
         self._seed_norm_df: DataFrame | None = None
-        self._streamed_d0 = False
-        #: standing per-partition bloom filters over the seen set (D2 scale
-        #: path): built ONCE from the seed frontier, then merged with each
-        #: superstep's delta (cost ∝ new urls, not total seen — at 10^10
-        #: urls a full rebuild per superstep would dominate the loop)
+        self._seed_norm_rows = 0
+        #: standing per-partition URL-seen filters (D2 scale path): built
+        #: ONCE from the seed frontier, then merged with each superstep's
+        #: delta on the helper thread (cost ∝ new urls, not total seen — at
+        #: 10^10 urls a full rebuild per superstep would dominate the loop)
+        #: and pinned or broadcast by size (see _bloom_job)
         self._blooms: DataFrame | None = None
         self._bloom_hwm: int = -1  # superstep whose additions are merged
         #: hosts throttled next superstep (F12 backoff — lib/job.go:122-132;
@@ -287,11 +274,6 @@ class Crawler:
         self._backoff_hosts: DataFrame | None = None
 
     # -- preparation -------------------------------------------------------
-
-    def _corpus_parts(self) -> int:
-        """Partition count for the persisted corpus — matches the pin width
-        so joins against it need no corpus-side exchange."""
-        return self._pin_parts
 
     @staticmethod
     def _parse_domain(d: str) -> tuple[str, str]:
@@ -359,21 +341,52 @@ class Crawler:
             )
         return sel
 
+    #: above this many rows the seed side table is joined without a
+    #: broadcast hint (AQE still broadcasts it when its runtime size allows)
+    #: — a large add_seeds_df stream must never be forced onto the driver
+    _SEED_NORM_BROADCAST_ROWS = 100_000
+
     def _note_seed_norms(self, seeds: list[str]) -> None:
-        """Record driver-side seeds' normal forms (diffs only) so _fetch
-        can use the broadcast-map path; costs ~µs per seed, once."""
-        for u in seeds:
-            n = normalize_url(u)
-            if n and n != u:
-                self._seed_norms[u] = n
-        self._seed_norm_df = None  # rebuilt lazily on next use
+        """Normalize a driver-side seed list (~µs per seed, once) and keep
+        the diffs in the side table _fetch joins."""
+        diffs = {u: n for u in seeds if (n := normalize_url(u)) and n != u}
+        if diffs:
+            self._add_seed_norms(self.spark.createDataFrame(
+                list(diffs.items()), "url string, url_norm string"))
+
+    def _norm_queued_seeds(self, new_rows) -> None:
+        """One normalize pass over the queued depth-0 rows selected by the
+        ``new_rows`` condition — for urls the driver never saw (add_seeds_df
+        streams, resumed snapshots). Only urls whose normal form differs
+        are kept (a NULL normal form stays a miss either way: no corpus key
+        equals a non-fixed-point url)."""
+        q = self._queued.filter((F.col("depth") == 0) & new_rows)
+        self._add_seed_norms(
+            q.select("url", _norm_udf(F.col("url")).alias("url_norm"))
+            .filter(F.col("url_norm") != F.col("url")))
+
+    def _add_seed_norms(self, norms: DataFrame) -> None:
+        """Fold (url, url_norm) diff rows into the side table. distinct:
+        the same raw seed can arrive twice (add_seeds of a queued url, a
+        config seed listed twice and restored by resume); a duplicate key
+        would fan out the batch rows its join attaches to."""
+        if self._seed_norm_df is not None:
+            norms = norms.unionByName(self._seed_norm_df)
+        self._set_seed_norms(norms.distinct())
+
+    def _set_seed_norms(self, df: DataFrame) -> None:
+        """Pin the side table as _pin does, but lazily, so the count that
+        sizes it (None when empty) is the job that materializes it."""
+        df = df.coalesce(self._pin_parts).localCheckpoint(eager=False)
+        self._seed_norm_rows = df.count()
+        self._seed_norm_df = df if self._seed_norm_rows else None
 
     def _seed_frontier(self) -> DataFrame:
         rows = [
             (
                 u,                       # exact raw seed string (not normalized
                 #                          — reference lib/coordinator.go:174-178)
-                _canonical_host_py(u),
+                canonical_host(u),
                 0, i, STATUS_QUEUED, 0, 0, 0, 0, self.cfg.job_id,
             )
             for i, u in enumerate(self.cfg.all_seeds())
@@ -591,56 +604,6 @@ class Crawler:
         )
         return self._chains
 
-    def _update_blooms_pinned(
-        self, frontier: DataFrame | None = None, superstep: int | None = None
-    ) -> DataFrame:
-        """Incremental bloom maintenance over the PREVIOUS superstep's
-        pinned frontier. The filters must be a SUPERSET of the seen set (a
-        missing url is a false negative → duplicate enqueue), so: first
-        call builds from the full pinned frontier; later calls merge only
-        rows enqueued since the last merged superstep.
-
-        Depends only on state pinned at the END of the last superstep, so
-        the superstep loop submits it to the helper thread at superstep
-        START — the filter merge runs concurrently with the fetch join +
-        extraction instead of serializing after them. The loop passes
-        ``frontier``/``superstep`` captured AT SUBMIT TIME so the helper
-        thread never races a later reassignment of ``self.frontier``."""
-        cfg = self.cfg
-        if frontier is None:
-            frontier = self.frontier
-        if superstep is None:
-            superstep = self.superstep
-        self._jd(f"ss{superstep}:bloom_merge")
-        items = cfg.bloom_expected_items // cfg.seen_partitions
-        build, merge = self._filter_ops()
-        if self._blooms is None:
-            self._blooms = self._pin(build(
-                frontier.select("part_id", "url"), items,
-                cfg.bloom_num_bits,
-            ))
-            self._bloom_hwm = superstep - 1
-        elif self._bloom_hwm < superstep - 1:
-            delta = frontier.filter(
-                F.col("superstep") > self._bloom_hwm
-            ).select("part_id", "url")
-            if cfg.seen_filter == "bloom":
-                # fused build+merge: one cogrouped pass hashes the delta
-                # urls straight into the standing bitsets (bit-identical;
-                # halves the helper thread's per-superstep filter work).
-                # The cuckoo kind keeps build+merge — its merge re-places
-                # fingerprints, a different kernel.
-                self._blooms = self._pin(D.merge_bloom_delta(
-                    self._blooms, delta, cfg.bloom_num_bits
-                ))
-            else:
-                self._blooms = self._pin(merge(
-                    self._blooms,
-                    build(delta, items, cfg.bloom_num_bits),
-                ))
-            self._bloom_hwm = superstep - 1
-        return self._blooms
-
     def _filter_ops(self):
         """(build, merge) for the configured URL-seen prefilter kind —
         north rule "bloom/cuckoo". Same (part_id, bf) table shape either
@@ -662,77 +625,65 @@ class Crawler:
             (max(self.cfg.bloom_num_bits, 1024) + 7) // 8
         )
 
-    def _bloom_job(self, frontier: DataFrame, superstep: int):
-        """Helper-thread bloom maintenance: merge the filters, then —
-        when the broadcast probe path applies and nothing superstep-local
-        can still change the filters (no recorded-redirect terminals) —
-        ALSO collect+broadcast them. The collect+broadcast was measured as
-        seconds of driver-serial time per superstep (it never shrinks with
-        executors); here it overlaps the fetch join + extraction, so the
-        main thread pays only a future .result().
-
-        On the broadcast path the driver copy IS the product, so the merge
-        plan is collected DIRECTLY — one job instead of pin-then-collect —
-        and the standing ``_blooms`` table is rebuilt from the collected
-        bytes (a local-relation DataFrame; by the path's own config bound
-        the filters are ≤ BLOOM_BROADCAST_MAX_BYTES, the same budget the
-        broadcast itself pays). The cogroup path keeps the pinned
-        executor-resident table (GB-scale filters never touch the driver)."""
+    def _filter_update(
+        self, frontier: DataFrame, superstep: int
+    ) -> DataFrame | None:
+        """The lazy plan that brings the URL-seen filters up to date with
+        ``frontier`` (the state pinned at the end of superstep
+        ``superstep - 1``), or None when they already are. The filters must
+        be a SUPERSET of the seen set (a missing url is a false negative →
+        duplicate enqueue), so the first call builds from the whole
+        frontier and later calls merge only the rows enqueued since the
+        last merged superstep: bloom fuses build+merge (one cogrouped pass
+        hashes the delta urls straight into the standing bitsets), cuckoo
+        keeps build+merge (its merge re-places fingerprints)."""
         cfg = self.cfg
-        use_bc = (not cfg.record_redirects
-                  and self._filters_bytes() <= D.BLOOM_BROADCAST_MAX_BYTES)
-        if not use_bc:
-            return self._update_blooms_pinned(frontier, superstep), None
-        self._jd(f"ss{superstep}:bloom_merge")
         items = cfg.bloom_expected_items // cfg.seen_partitions
         build, merge = self._filter_ops()
-        plan = None
         if self._blooms is None:
-            plan = build(frontier.select("part_id", "url"), items,
+            return build(frontier.select("part_id", "url"), items,
                          cfg.bloom_num_bits)
-        elif self._bloom_hwm < superstep - 1:
-            delta = frontier.filter(
-                F.col("superstep") > self._bloom_hwm
-            ).select("part_id", "url")
-            if cfg.seen_filter == "bloom":
-                plan = D.merge_bloom_delta(self._blooms, delta,
-                                           cfg.bloom_num_bits)
-            else:
-                plan = merge(self._blooms,
-                             build(delta, items, cfg.bloom_num_bits))
-        if plan is not None:
-            rows = [(int(r["part_id"]), bytes(r["bf"]))
-                    for r in plan.collect()]
-            self._blooms = self.spark.createDataFrame(
-                rows, "part_id int, bf binary")
-            self._bloom_hwm = superstep - 1
-            bc = self.spark.sparkContext.broadcast(dict(rows))
-            self._bloom_registry.append(bc)
-            return self._blooms, bc
-        self._jd(f"ss{superstep}:bloom_bcast")
-        bc = D.prepare_bloom_broadcast(self._blooms, self._bloom_registry)
-        return self._blooms, bc
+        if self._bloom_hwm >= superstep - 1:
+            return None
+        delta = frontier.filter(
+            F.col("superstep") > self._bloom_hwm
+        ).select("part_id", "url")
+        if cfg.seen_filter == "bloom":
+            return D.merge_bloom_delta(self._blooms, delta,
+                                       cfg.bloom_num_bits)
+        return merge(self._blooms, build(delta, items, cfg.bloom_num_bits))
 
-    def _update_blooms(
-        self, redirect_terminals: DataFrame | None,
-        pinned: DataFrame | None = None,
-    ) -> DataFrame:
-        """Full bloom view for this superstep: the pinned base plus
-        redirect terminals created THIS superstep (not yet in the pinned
-        frontier), merged lazily."""
-        cfg = self.cfg
-        items = cfg.bloom_expected_items // cfg.seen_partitions
-        build, merge = self._filter_ops()
-        blooms = pinned if pinned is not None else self._update_blooms_pinned()
-        if redirect_terminals is not None:
-            blooms = merge(
-                blooms,
-                build(
-                    redirect_terminals.select("part_id", "url"), items,
-                    cfg.bloom_num_bits,
-                ),
-            )
-        return blooms
+    def _bloom_job(self, frontier: DataFrame, superstep: int):
+        """Helper-thread filter maintenance → (filters, broadcast or None).
+        It depends only on state pinned at the END of the last superstep,
+        so the loop submits it at superstep START with ``frontier`` /
+        ``superstep`` captured at submit time (the thread never races a
+        later reassignment of ``self.frontier``): the merge overlaps the
+        fetch join + extraction instead of serializing after them.
+
+        One end by the config-derived ``_filters_bytes()``: above
+        BLOOM_BROADCAST_MAX_BYTES the merged table is pinned on the
+        executors for the cogroup probe (GB-scale filters never touch the
+        driver); otherwise the plan is collected DIRECTLY — one job, no
+        pin — and broadcast for the in-place probe
+        (D.prepare_bloom_broadcast), and the standing table becomes a local
+        relation of the broadcast's driver copy. That
+        collect+broadcast is driver-serial time that never shrinks with
+        executors; here the main thread pays only a future .result()."""
+        self._jd(f"ss{superstep}:bloom_merge")
+        plan = self._filter_update(frontier, superstep)
+        if plan is not None:
+            self._bloom_hwm = superstep - 1
+        if self._filters_bytes() > D.BLOOM_BROADCAST_MAX_BYTES:
+            if plan is not None:
+                self._blooms = self._pin(plan)
+            return self._blooms, None
+        bc = D.prepare_bloom_broadcast(
+            plan if plan is not None else self._blooms, self._bloom_registry)
+        if plan is not None:
+            self._blooms = self.spark.createDataFrame(
+                list(bc.value.items()), "part_id int, bf binary")
+        return self._blooms, bc
 
     def _fetch_http(self, batch: DataFrame) -> DataFrame:
         """S2 real mode: live GETs (sources.http_fetch, worker.go:138-228
@@ -797,49 +748,20 @@ class Crawler:
         # already through resolve_and_normalize — and normalization is
         # idempotent (tests/test_urlnorm_properties.py::test_idempotent),
         # so their url IS its normal form. Only depth-0 rows (seeds,
-        # enqueued verbatim per lib/coordinator.go:174-178) can differ:
-        # run the Python normalize UDF on those alone instead of the whole
-        # batch (guide §4 — don't pay the JVM↔Python boundary for rows
-        # whose answer is the identity). A when() would NOT help here:
-        # Spark extracts Python UDFs into an eval node that runs on every
-        # row regardless of the branch, so the split must be a filter+union.
-        # When the tracked depth-0 queued count says NO seed-depth row can
-        # be in this batch (the common steady state after superstep 1),
-        # the plan carries no Python eval node and no union at all. While
-        # driver-known seeds ARE still queued, their normal forms were
-        # computed on the driver at enqueue time: a broadcast of the
-        # (raw, norm) DIFFS — usually empty, because well-formed seeds are
-        # normalization fixed points — replaces the UDF pass entirely (a
-        # non-fixed-point key cannot equal any depth>0 url, so the
-        # coalesce is exact). Only depth-0 rows of unknown provenance
-        # (add_seeds_df streams, resumed snapshots) keep the Python
-        # filter+union branch; a when() would not help there — Spark
-        # extracts Python UDFs into an eval node that runs on every row.
-        if self._d0_queued == 0:
+        # enqueued verbatim per lib/coordinator.go:174-178) can differ, and
+        # their normal forms were fixed at enqueue in the (url, url_norm)
+        # side table. A left join on it is exact for every batch row: a
+        # side-table key is not a fixed point, so it can never equal a
+        # depth > 0 url. No Python UDF runs in the superstep's fetch.
+        if self._seed_norm_df is None:
             b = batch.withColumn("url_norm", F.col("url"))
-        elif not self._streamed_d0:
-            if not self._seed_norms:
-                b = batch.withColumn("url_norm", F.col("url"))
-            else:
-                if self._seed_norm_df is None:
-                    self._seed_norm_df = self.spark.createDataFrame(
-                        list(self._seed_norms.items()),
-                        "url string, _seed_norm string",
-                    )
-                b = batch.join(
-                    F.broadcast(self._seed_norm_df), "url", "left"
-                ).withColumn(
-                    "url_norm",
-                    F.coalesce(F.col("_seed_norm"), F.col("url")),
-                ).drop("_seed_norm")
         else:
-            seeds0 = batch.filter(F.col("depth") == 0).withColumn(
-                "url_norm", _norm_udf(F.col("url"))
+            norms = self._seed_norm_df
+            if self._seed_norm_rows <= self._SEED_NORM_BROADCAST_ROWS:
+                norms = F.broadcast(norms)
+            b = batch.join(norms, "url", "left").withColumn(
+                "url_norm", F.coalesce(F.col("url_norm"), F.col("url"))
             )
-            rest = batch.filter(F.col("depth") > 0).withColumn(
-                "url_norm", F.col("url")
-            )
-            b = seeds0.unionByName(rest)
         chains = self._redirect_chains()
         self._hop_rows = None
         if chains is not None:
@@ -962,20 +884,6 @@ class Crawler:
             self.resources = self.spark.createDataFrame([], RESOURCES_SCHEMA)
             self.order = self.spark.createDataFrame([], ORDER_SCHEMA)
             self._queued_count = len(self.cfg.all_seeds())
-            self._d0_queued = self._queued_count  # all seeds are depth 0
-        elif self._queued is None:
-            # state arrived as one snapshot (resume): derive the split
-            # lazily — both filters read the same parquet/pin. Queued
-            # depth-0 rows of unknown provenance (the original run may
-            # have add_seeds'ed urls not in cfg) → normalize via the UDF
-            # branch, never the driver-side seed map.
-            self._streamed_d0 = True
-            self._queued = self.frontier.filter(
-                F.col("status") == STATUS_QUEUED
-            )
-            self._term_parts = [
-                self.frontier.filter(F.col("status") != STATUS_QUEUED)
-            ]
 
     def add_seeds(self, seeds: list[str]) -> None:
         """Enqueue more seeds mid-crawl (the streaming-ingest path). Unlike
@@ -988,14 +896,14 @@ class Crawler:
         seeds = [u for u in seeds if not (u in _seen or _seen.add(u))]
         rows = [
             (
-                u, _canonical_host_py(u), 0, self.next_seq + i, STATUS_QUEUED,
+                u, canonical_host(u), 0, self.next_seq + i, STATUS_QUEUED,
                 0, 0, self.superstep, 0, self.cfg.job_id,
             )
             for i, u in enumerate(seeds)
         ]
         if not rows:
             return
-        self._note_seed_norms(seeds)  # driver-known: keep the map path
+        self._note_seed_norms(seeds)
         df = self.spark.createDataFrame(rows, FRONTIER_SCHEMA).withColumn(
             "part_id", self._part_id_col(F.col("host"), F.col("url"))
         )
@@ -1007,8 +915,6 @@ class Crawler:
             self._rebuild_frontier_view()
             if self._queued_count is not None:
                 self._queued_count += n
-            if self._d0_queued is not None:
-                self._d0_queued += n  # late seeds enqueue at depth 0
 
     def add_seeds_df(self, seeds: DataFrame, url_col: str = "url") -> int:
         """Enqueue a DataFrame of seed urls mid-crawl WITHOUT materializing
@@ -1056,16 +962,14 @@ class Crawler:
                 F.lit(self.cfg.job_id).alias("job_id"),
             )
         )
+        start = self.next_seq
         self.next_seq += n
         self._queued = self._pin(self._queued.unionByName(rows))
         self._rebuild_frontier_view()
         if self._queued_count is not None:
             self._queued_count += n
-        if self._d0_queued is not None:
-            self._d0_queued += n  # stream seeds enqueue at depth 0
-        # stream urls never pass through the driver, so their normal
-        # forms are unknown — depth-0 batches must use the UDF branch
-        self._streamed_d0 = True
+        # the new rows are exactly the queued seqs >= start
+        self._norm_queued_seeds(F.col("discovery_seq") >= start)
         return n
 
     def forget_urls(self, urls: list[str]) -> int:
@@ -1088,15 +992,7 @@ class Crawler:
         n_total = self.frontier.filter(hit).count()
         if n_total == 0:
             return 0
-        qrow = self._queued.filter(hit).agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum((F.col("depth") == 0).cast("long")), F.lit(0)
-            ).alias("n0"),
-        ).first()
-        n_q = qrow["n"]
-        if self._d0_queued is not None:
-            self._d0_queued -= int(qrow["n0"])
+        n_q = self._queued.filter(hit).count()
         if self._blooms is not None:
             if self.cfg.seen_filter == "cuckoo":
                 from walk_spark.operators import cuckoo as CK
@@ -1120,16 +1016,7 @@ class Crawler:
         collect already pays for — exact, zero extra jobs."""
         self._ensure_state()
         if self._queued_count is None:  # resume path: one count, once
-            qrow = self.frontier.filter(
-                F.col("status") == STATUS_QUEUED
-            ).agg(
-                F.count("*").alias("n"),
-                F.coalesce(
-                    F.sum((F.col("depth") == 0).cast("long")), F.lit(0)
-                ).alias("n0"),
-            ).first()
-            self._queued_count = qrow["n"]
-            self._d0_queued = int(qrow["n0"])
+            self._queued_count = self._queued.count()
         # NOTE (measured, round 6): running the loop with AQE disabled was
         # tried to cut the ~15 query-stage jobs/superstep AQE submits — and
         # LOST a same-session A/B 3/3 (17-28 s vs 12-14 s at bench shape):
@@ -1153,6 +1040,12 @@ class Crawler:
                 )
                 t_ck = time.monotonic()
                 self._checkpoint_state()
+                if self._seed_norm_df is not None:
+                    # keep only seeds still queued (fetched ones are done
+                    # or requeued; requeued rows stay in the queue)
+                    self._set_seed_norms(self._seed_norm_df.join(
+                        self._queued.filter(F.col("depth") == 0)
+                        .select("url"), "url", "left_semi"))
                 if "trace" in m:
                     m["trace"]["checkpoint"] = round(
                         time.monotonic() - t_ck, 3
@@ -1331,10 +1224,6 @@ class Crawler:
             F.count("*").alias("n"),
             F.sum(backoff_flag.cast("int")).alias("nb"),
             F.max(stop_flag).alias("stop"),
-            # depth-0 rows per outcome: keeps the _d0_queued tracker exact
-            # (picked depth-0 leave the queue; requeued ones re-enter)
-            # with zero extra jobs
-            F.sum((F.col("depth") == 0).cast("int")).alias("n0"),
         )
 
         def _stat_job():
@@ -1497,27 +1386,25 @@ class Crawler:
             )
             cands = D.dedup_within_batch(cands, ("part_id", "url"))
             seen = new_frontier.select("part_id", "url")
-            blooms = None
-            filters_bytes = None
-            prepared_bc = None
+            blooms = prepared_bc = None
             if cfg.use_bloom:
-                pinned, prepared_bc = bloom_future.result()
-                blooms = self._update_blooms(redirect_terminals, pinned=pinned)
+                blooms, prepared_bc = bloom_future.result()
                 trace["bloom_update"] = round(time.monotonic() - t0, 3)
-                # config-derived (deterministic across cluster sizes)
-                filters_bytes = self._filters_bytes()
-                if redirect_terminals is not None:
-                    # this superstep's redirect terminals were merged into
-                    # the filters AFTER the helper's collect — its
-                    # broadcast is stale; fall back to collect-at-use
-                    prepared_bc = None
             t_aj = time.monotonic()
             self._jd(f"ss{k}:expand_build")
             fresh = D.anti_join_seen(
-                cands, seen, blooms, filters_bytes,
+                cands, seen, blooms, self._filters_bytes(),
                 prepared_bc=prepared_bc, registry=self._bloom_registry,
                 filter_kind=self.cfg.seen_filter,
             )
+            if blooms is not None and redirect_terminals is not None:
+                # the filters cover the previous frontier; this superstep's
+                # redirect terminals are the only seen urls outside it, so
+                # one exact anti-join against them completes the seen test
+                fresh = fresh.join(
+                    redirect_terminals.select("part_id", "url"),
+                    ["part_id", "url"], "left_anti",
+                )
             # anti_join_seen's lazy checkpoint materializes the candidate
             # pipeline's shuffle stages here (AQE executes query stages on
             # .rdd) — this window is the expansion build, traced apart
@@ -1586,13 +1473,6 @@ class Crawler:
         counts = {r["status"]: r["n"] for r in stat_rows}
         n_backoff = sum(r["nb"] or 0 for r in stat_rows)
         hit_stop = any(r["stop"] for r in stat_rows)
-        if self._d0_queued is not None:
-            d0_picked = sum(r["n0"] or 0 for r in stat_rows)
-            d0_requeued = sum(
-                r["n0"] or 0 for r in stat_rows
-                if r["status"] == STATUS_QUEUED
-            )
-            self._d0_queued += d0_requeued - d0_picked
         n_done = counts.get(STATUS_DONE, 0) + counts.get(STATUS_REDIRECTED, 0)
         self.total_done += n_done
 
@@ -1755,8 +1635,8 @@ class Crawler:
         c._queued = c.frontier.filter(F.col("status") == STATUS_QUEUED)
         c._term_parts = [c.frontier.filter(F.col("status") != STATUS_QUEUED)]
         # queued depth-0 rows may include urls the original run
-        # add_seeds'ed (not in cfg) — normalize them via the UDF branch
-        c._streamed_d0 = True
+        # add_seeds'ed (not in cfg): normalize them from the snapshot
+        c._norm_queued_seeds(F.lit(True))
         backoff = last.get("backoff_hosts") or []
         if backoff:
             c._backoff_hosts = spark.createDataFrame(
